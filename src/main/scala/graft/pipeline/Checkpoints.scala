@@ -51,14 +51,16 @@ final class Checkpoints(spark: SparkSession, baseDir: String) {
       val df = compute
       df.write.mode("overwrite").parquet(stageDir(name))
       val persisted = spark.read.parquet(stageDir(name))
-      // per-partition lineage: rows per spark partition of the snapshot
-      val counts = persisted
+      // per-partition lineage: rows per spark partition of the snapshot;
+      // their sum is the stage's row count, so one job reads it back
+      val perPart = persisted
         .groupBy(spark_partition_id().as("partition"))
         .agg(count(lit(1)).as("rows"))
         .collect()
-        .map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
+        .map(r => (r.getInt(0), r.getLong(1)))
+      val counts = perPart.map { case (p, n) => s"""{"partition":$p,"rows":$n}""" }
       val total = counts.length
-      val rows = persisted.count()
+      val rows = perPart.map(_._2).sum
       Files.createDirectories(Paths.get(stageDir(name)))
       val tmp = Paths.get(s"${stageDir(name)}/_MANIFEST.tmp")
       Files.writeString(tmp,

@@ -45,9 +45,7 @@ object Redirects {
    * each step checks the newly visited node against the accumulated path.
    */
   def transitiveClosure(edges: DataFrame, maxDepth: Int = 16,
-      localThreshold: Long = 2000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      localThreshold: Long = 2000000L): DataFrame =
     // Adaptive fast path: alias graphs are orders of magnitude smaller
     // than the corpus; below the threshold, a FUNCTIONAL graph (at most
     // one successor per node — what single-#ALIAS-declaration corpora
@@ -56,65 +54,48 @@ object Redirects {
     // a node's reachable-terminal set depends on the path taken), so
     // non-functional graphs fall through to the distributed loop. Same
     // output contract incl. the maxDepth cap (equivalence tested).
-    if (e.count() <= localThreshold) {
-      resolveLocalFunctional(e, maxDepth.toLong) match {
-        case Some(out) =>
-          e.unpersist(false) // collected; the local result reads no cache
-          return out
-        case None => () // non-functional: fall through to the loop
+    GraphLoop("transitiveClosure", edges.select(col("src"), col("dst")).distinct(),
+        localThreshold, resolveLocalFunctional(_, maxDepth.toLong)) { loop =>
+      val e = loop.edges
+      // seed: every edge, path = [src] (nodes already visited)
+      var frontier = e.select(col("src"), col("dst"), array(col("src")).as("path"))
+      var settled: DataFrame = null
+      var depth = 0
+      var done = false
+      while (depth < maxDepth && !done) {
+        val step = frontier.as("f")
+          .join(e.as("n"), col("f.dst") === col("n.src"), "left_outer")
+          .select(
+            col("f.src").as("src"),
+            col("f.dst").as("cur"),
+            col("n.dst").as("next"),
+            col("f.path").as("path"))
+        // settled: cur is not an alias source -> cur is the root
+        val newSettled = step.filter(col("next").isNull)
+          .select(col("src"), col("cur").as("root"))
+        settled = if (settled == null) newSettled else settled.unionByName(newSettled)
+        // continue: visit cur, drop cycles (cur already on the path)
+        val cached = loop.persist(step.filter(col("next").isNotNull)
+          .filter(!array_contains(col("path"), col("cur")))
+          .select(
+            col("src"),
+            col("next").as("dst"),
+            concat(col("path"), array(col("cur"))).as("path")))
+        depth += 1
+        // persist stops recomputation but the logical plan still nests one
+        // level per iteration; truncate it with a real checkpoint every
+        // 4 levels so a deep closure can't grow an unplannable tree
+        // lazy checkpoint: the fixpoint count below materializes it (one
+        // job on every depth, where the eager form cost two on each 4th)
+        frontier = if (depth % 4 == 0) loop.checkpoint(cached) else cached
+        done = frontier.count() == 0
       }
+      // the settled plan reads every level's cache, so the result is the
+      // (alias-graph-sized) eager checkpoint and the scope frees every
+      // level: the post-call persisted delta is one checkpointed result,
+      // independent of depth
+      loop.checkpoint(settled.distinct(), eager = true)
     }
-    // seed: every edge, path = [src] (nodes already visited)
-    var frontier = e.select(col("src"), col("dst"), array(col("src")).as("path"))
-    val cachedLevels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var settled: DataFrame = null
-    var depth = 0
-    var done = false
-    while (depth < maxDepth && !done) {
-      val step = frontier.as("f")
-        .join(e.as("n"), col("f.dst") === col("n.src"), "left_outer")
-        .select(
-          col("f.src").as("src"),
-          col("f.dst").as("cur"),
-          col("n.dst").as("next"),
-          col("f.path").as("path"))
-      // settled: cur is not an alias source -> cur is the root
-      val newSettled = step.filter(col("next").isNull)
-        .select(col("src"), col("cur").as("root"))
-      settled = if (settled == null) newSettled else settled.unionByName(newSettled)
-      // continue: visit cur, drop cycles (cur already on the path)
-      val cached = step.filter(col("next").isNotNull)
-        .filter(!array_contains(col("path"), col("cur")))
-        .select(
-          col("src"),
-          col("next").as("dst"),
-          concat(col("path"), array(col("cur"))).as("path"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cachedLevels += cached
-      depth += 1
-      // persist stops recomputation but the logical plan still nests one
-      // level per iteration; truncate it with a real checkpoint every
-      // 4 levels so a deep closure can't grow an unplannable tree
-      // (checkpoint blocks are auto-freed by the ContextCleaner once
-      // unreferenced)
-      // lazy checkpoint: the fixpoint count below materializes it (one
-      // job on every depth, where the eager form cost two on each 4th)
-      frontier = if (depth % 4 == 0) cached.localCheckpoint(eager = false) else cached
-      done = frontier.count() == 0
-    }
-    // the settled plan reads every level's cache, so materialize the
-    // (alias-graph-sized) result ONCE, then release all loop caches —
-    // previously each level's persist leaked into the session for the
-    // app lifetime. Post-call persisted delta: one checkpointed result,
-    // independent of depth. (localCheckpoint blocks are executor-local,
-    // not fault-tolerant: a multi-hour cluster run should write the
-    // closure through a reliable stage snapshot instead —
-    // Checkpoints.runStage — and resume from it.)
-    val out = settled.distinct().localCheckpoint(true)
-    cachedLevels.foreach(_.unpersist(false))
-    e.unpersist(false)
-    out
-  }
 
   /**
    * Driver-side resolver for a small FUNCTIONAL alias graph (at most
@@ -188,59 +169,49 @@ object Redirects {
    * output contract as [[transitiveClosure]] (equivalence tested).
    */
   def transitiveClosureDoubling(edges: DataFrame, maxRounds: Int = 16,
-      localThreshold: Long = 2000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
+      localThreshold: Long = 2000000L): DataFrame =
     // same adaptive driver fast path as transitiveClosure (alias graphs
     // are orders of magnitude under the corpus); hop cap = 2^maxRounds,
     // matching what `maxRounds` doubling rounds can resolve
-    if (e.count() <= localThreshold) {
-      resolveLocalFunctional(e, 1L << math.min(maxRounds, 62)) match {
-        case Some(out) => e.unpersist(false); return out
-        case None => ()
+    GraphLoop("transitiveClosureDoubling", edges.select(col("src"), col("dst")).distinct(),
+        localThreshold, resolveLocalFunctional(_, 1L << math.min(maxRounds, 62))) { loop =>
+      val e = loop.edges
+      var f = loop.persist(e.select(col("src"), col("dst").as("cur")))
+      var read = Seq(f) // what the next round's jump reads
+      var round = 0
+      var converged = false
+      while (!converged && round < maxRounds) {
+        val jumped = loop.persist(f.as("a")
+          .join(f.as("b"), col("a.cur") === col("b.src"), "left_outer")
+          .select(col("a.src").as("src"),
+            coalesce(col("b.cur"), col("a.cur")).as("cur"),
+            col("b.cur").isNotNull.as("_moved")))
+        // converged when nothing moved. Rows inside a cycle move forever,
+        // so a cyclic graph runs all maxRounds — bounded, and each round
+        // is one |V|-row self-join (cheap at alias-graph sizes); their
+        // rows are dropped by the final anti-join regardless.
+        val moved = jumped.filter(col("_moved")).count()
+        // the previous level is superseded the moment `jumped` is
+        // materialized — freed so a long-running session doesn't
+        // accumulate one cached RDD per round
+        loop.release(read: _*)
+        f = jumped.drop("_moved")
+        read = Seq(jumped)
+        // lazy: the next round's moved-count (or the final anti-join's
+        // checkpoint) materializes it — saves one job per lineage cut
+        if (round % 4 == 3) { f = loop.checkpoint(f); read :+= f }
+        round += 1
+        converged = moved == 0
       }
+      // settled: jump target has no outgoing edge (terminal); cycle
+      // members still point at an alias source and are dropped. The
+      // result is eagerly checkpointed (it is alias-graph-sized, orders
+      // of magnitude under the corpus) so every loop cache is freed
+      // here instead of leaking until the caller drops the result.
+      loop.checkpoint(f.join(e.select(col("src").as("cur")).distinct(), Seq("cur"), "left_anti")
+        .select(col("src"), col("cur").as("root"))
+        .distinct(), eager = true)
     }
-    var f = e.select(col("src"), col("dst").as("cur")).persist(lvl)
-    var prev: DataFrame = f
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val jumped = f.as("a")
-        .join(f.as("b"), col("a.cur") === col("b.src"), "left_outer")
-        .select(col("a.src").as("src"),
-          coalesce(col("b.cur"), col("a.cur")).as("cur"),
-          col("b.cur").isNotNull.as("_moved"))
-        .persist(lvl)
-      // converged when nothing moved. Rows inside a cycle move forever,
-      // so a cyclic graph runs all maxRounds — bounded, and each round
-      // is one |V|-row self-join (cheap at alias-graph sizes); their
-      // rows are dropped by the final anti-join regardless.
-      val moved = jumped.filter(col("_moved")).count()
-      // the previous level's cache is superseded the moment `jumped` is
-      // materialized — unpersist it so a long-running session doesn't
-      // accumulate one cached RDD per round
-      if (prev ne null) prev.unpersist(false)
-      prev = jumped
-      f = jumped.drop("_moved")
-      // lazy: the next round's moved-count (or the final anti-join's
-      // checkpoint) materializes it — saves one job per lineage cut
-      if (round % 4 == 3) f = f.localCheckpoint(eager = false)
-      round += 1
-      converged = moved == 0
-    }
-    // settled: jump target has no outgoing edge (terminal); cycle
-    // members still point at an alias source and are dropped. The
-    // result is eagerly checkpointed (it is alias-graph-sized, orders
-    // of magnitude under the corpus) so every loop cache can be freed
-    // here instead of leaking until the caller drops the result.
-    val out = f.join(e.select(col("src").as("cur")).distinct(), Seq("cur"), "left_anti")
-      .select(col("src"), col("cur").as("root"))
-      .distinct()
-      .localCheckpoint(true)
-    if (prev ne null) prev.unpersist(false)
-    e.unpersist(false)
-    out
-  }
 
   /**
    * Cycle membership in a FUNCTIONAL redirect graph — the audit
@@ -273,42 +244,44 @@ object Redirects {
    */
   def cycleMembers(edges: DataFrame,
       localThreshold: Long = 4000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
+    val edgeRel = edges.select(col("src"), col("dst")).distinct()
     // the driver twin compares collected values as boxed Any — an
     // Integer src never equals a Long dst there, while the SQL join
     // casts; demand one id type so the paths cannot silently diverge
-    require(e.schema.fields(0).dataType == e.schema.fields(1).dataType,
-      s"cycleMembers: src/dst types differ (${e.schema.fields(0).dataType} " +
-        s"vs ${e.schema.fields(1).dataType}); cast the edge columns to one id type")
-    val n = e.count()
-    if (n > 0) {
-      val maxOut = e.groupBy(col("src")).agg(count(lit(1)).as("c"))
-        .agg(max(col("c"))).head().getLong(0)
-      require(maxOut <= 1,
-        s"cycleMembers requires a functional graph (max out-degree 1), found $maxOut")
+    require(edgeRel.schema.fields(0).dataType == edgeRel.schema.fields(1).dataType,
+      s"cycleMembers: src/dst types differ (${edgeRel.schema.fields(0).dataType} " +
+        s"vs ${edgeRel.schema.fields(1).dataType}); cast the edge columns to one id type")
+    def functional(e: DataFrame): DataFrame = {
+      val maxOut = e.groupBy(col("src")).agg(count(lit(1)).as("c")).agg(max(col("c"))).head()
+      require(maxOut.isNullAt(0) || maxOut.getLong(0) <= 1,
+        s"cycleMembers requires a functional graph (max out-degree 1), found ${maxOut.get(0)}")
+      e
     }
     // adaptive driver fast path (the pageRank/hopDistance convention):
     // ⌈log₂n⌉ checkpointed self-joins are pure scheduling latency at
     // small n, and a functional graph's cycles fall out of one linear
     // color walk over the collected edge list
-    if (n <= localThreshold) return cycleMembersLocal(e)
-    var f = e
-    var span = 1L
-    var fCount = n
-    while (span <= n && fCount > 0) {
-      // strict span > |srcs| exit (see doc); the survivor count doubles
-      // as the emptiness check and stops the common acyclic-forest case
-      // after ~max-chain-length rounds instead of all ceil(log2 n) of
-      // them. LAZY checkpoint + count = ONE job per round (the eager
-      // checkpoint + limit(1) probe pair cost two); the checkpoint
-      // still cuts the plan every round — the self-join doubles it.
-      f = f.as("a").join(f.as("b"), col("a.dst") === col("b.src"))
-        .select(col("a.src").as("src"), col("b.dst").as("dst"))
-        .localCheckpoint(eager = false)
-      fCount = f.count()
-      span *= 2
+    GraphLoop("cycleMembers", edgeRel, localThreshold,
+        e => Some(cycleMembersLocal(functional(e))), checkpointEdges = true) { loop =>
+      var f = functional(loop.edges)
+      var span = 1L
+      var fCount = loop.nEdges
+      while (span <= loop.nEdges && fCount > 0) {
+        // strict span > |srcs| exit (see doc); the survivor count doubles
+        // as the emptiness check and stops the common acyclic-forest case
+        // after ~max-chain-length rounds instead of all ceil(log2 n) of
+        // them. LAZY checkpoint + count = ONE job per round (the eager
+        // checkpoint + limit(1) probe pair cost two); the checkpoint
+        // still cuts the plan every round — the self-join doubles it.
+        val next = loop.checkpoint(f.as("a").join(f.as("b"), col("a.dst") === col("b.src"))
+          .select(col("a.src").as("src"), col("b.dst").as("dst")))
+        fCount = next.count()
+        loop.release(f)
+        f = next
+        span *= 2
+      }
+      f.select(col("dst").as("node")).distinct()
     }
-    f.select(col("dst").as("node")).distinct()
   }
 
   /** Driver-side twin: three-color walk over the collected functional

@@ -57,39 +57,41 @@ object TopicGraph {
   def groundedAncestry(edges: DataFrame, roots: DataFrame, maxDepth: Int = 5,
       dedupFrontier: Boolean = true): DataFrame = {
     // edges: (src=narrower/child, dst=broader/parent); walk parent->child
-    val down = edges.select(col("dst").as("parent"), col("src").as("child"))
-      .distinct().localCheckpoint(true)
-    var frontier = roots.select(
-      col("root").as("node"),
-      col("root"),
-      lit(0).as("depth"),
-      col("root").as("path"))
-    var acc = frontier
-    var depth = 0
-    while (depth < maxDepth) {
-      val stepped = frontier.as("f")
-        .join(down.as("e"), col("f.node") === col("e.parent"), "inner")
-        .select(
-          col("e.child").as("node"),
-          col("f.root").as("root"),
-          (col("f.depth") + 1).as("depth"),
-          concat_ws("/", col("f.path"), col("e.child")).as("path"))
-        // cycle guard: CONCAT path then FILTER NoLoopInPath
-        // (topic-corpus/05_…pig:56,66 pattern)
-        .filter(!array_contains(
-          slice(split(col("path"), "/"), lit(1), size(split(col("path"), "/")) - 1),
-          element_at(split(col("path"), "/"), -1)))
-      val next = (if (dedupFrontier) {
-        // keep one (lexicographically-first) path per (node, root)
-        stepped.groupBy(col("node"), col("root"), col("depth"))
-          .agg(min(col("path")).as("path"))
-          .select(col("node"), col("root"), col("depth"), col("path"))
-      } else stepped).localCheckpoint(true)
-      acc = acc.unionByName(next)
-      frontier = next
-      depth += 1
+    GraphLoop("groundedAncestry", edges.select(col("dst").as("parent"),
+        col("src").as("child")).distinct(), checkpointEdges = true) { loop =>
+      val down = loop.edges
+      var frontier = roots.select(
+        col("root").as("node"),
+        col("root"),
+        lit(0).as("depth"),
+        col("root").as("path"))
+      var acc = frontier
+      var depth = 0
+      while (depth < maxDepth) {
+        val stepped = frontier.as("f")
+          .join(down.as("e"), col("f.node") === col("e.parent"), "inner")
+          .select(
+            col("e.child").as("node"),
+            col("f.root").as("root"),
+            (col("f.depth") + 1).as("depth"),
+            concat_ws("/", col("f.path"), col("e.child")).as("path"))
+          // cycle guard: CONCAT path then FILTER NoLoopInPath
+          // (topic-corpus/05_…pig:56,66 pattern)
+          .filter(!array_contains(
+            slice(split(col("path"), "/"), lit(1), size(split(col("path"), "/")) - 1),
+            element_at(split(col("path"), "/"), -1)))
+        val next = loop.checkpoint(if (dedupFrontier) {
+          // keep one (lexicographically-first) path per (node, root)
+          stepped.groupBy(col("node"), col("root"), col("depth"))
+            .agg(min(col("path")).as("path"))
+            .select(col("node"), col("root"), col("depth"), col("path"))
+        } else stepped, eager = true)
+        acc = acc.unionByName(next)
+        frontier = next
+        depth += 1
+      }
+      acc
     }
-    acc
   }
 
   /**
@@ -108,31 +110,23 @@ object TopicGraph {
    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 30,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(lvl)
-    val nEdges = sym.count()
+      .distinct()
     // Adaptive: below the threshold the component graph is a DRIVER
     // problem — the distributed loop pays seconds of scheduling per
     // round for microseconds of union-find work (measured 16s for a
     // 3,209-edge graph vs 0.1s collected); dedup-component graphs are
     // tiny next to the corpus by construction. The contraction path
     // handles the genuinely large case (tested with localThreshold = 0).
-    if (nEdges <= localThreshold) {
-      val out = ccLocal(sym)
-      sym.unpersist(false)
-      return out
-    }
-    val out = ccContraction(sym, maxIter, nEdges)
-    sym.unpersist(false)
-    out
+    GraphLoop("connectedComponents", sym, localThreshold, s => Some(ccLocal(s)),
+      graphParallelism = true)(ccContraction(_, maxIter))
   }
 
   /**
-   * Alternating large-star/small-star rounds over the (already
-   * symmetrized, persisted) edge relation until the edge multiset is
-   * stable, then read the labels off the final stars.
+   * Alternating large-star/small-star rounds over the scope's (already
+   * symmetrized) edge relation until the edge multiset is stable, then
+   * read the labels off the final stars.
    *
    *  - large-star(u): every neighbor v > u rewires to
    *    m(u) = min(Γ(u) ∪ {u}) — (v, m) for (u,v) ∈ E, v > u;
@@ -149,12 +143,8 @@ object TopicGraph {
    * has exactly the edge (v, component-min), so labels = E itself plus
    * (center, center) rows.
    */
-  private[graft] def ccContraction(sym: DataFrame, maxIter: Int,
-      nEdges: Long): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = sym.sparkSession
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
+  private def ccContraction(loop: GraphLoop, maxIter: Int): DataFrame = {
+    val sym = loop.edges
     // Exchange discipline inside the stars (guide §2.4 — share one
     // partitioning across operations keyed the same way): each star
     // repartitions its working relation ONCE by `src`; the min
@@ -190,58 +180,45 @@ object TopicGraph {
         .filter(col("src") =!= col("dst"))
         .distinct()
     }
-    // the loop's shuffles run at the graph's own parallelism (rounds
-    // are shuffle-latency-bound at dedup-graph sizes); session setting
-    // restored after — same discipline as the min-label loop
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      // node universe BEFORE dropping self-loops: a node whose only
-      // edge is (a, a) forms its own component and must appear in the
-      // output (as it does on the union-find and min-label paths), but
-      // the star rounds erase self-loops — restore such nodes at the end
-      val nodes = sym.select(col("src").as("node")).distinct()
-        .localCheckpoint(true)
-      var e = sym.filter(col("src") =!= col("dst"))
-      var eIsLoopOwned = false
-      var it = 0
-      var prevSig: (Long, Long) = null
-      var stable = false
-      while (!stable && it < maxIter) {
-        // checkpoint EVERY round: one round's plan references `e` four
-        // times (two stars × (neighbor union + min join)), so an
-        // unchecked plan multiplies ~16-25× per round — every-4-rounds
-        // lineage cuts (the min-label loop's cadence) left a plan tree
-        // whose explain string alone OOMed the driver. LAZY checkpoint:
-        // the signature aggregate right below is the materializing
-        // action, so each round is ONE job where eager-checkpoint+agg
-        // was two identical passes.
-        val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
-        it += 1
-        val sigRow = next
-          .agg(count(lit(1)), expr("bit_xor(xxhash64(src, dst))")).head()
-        val sig = (sigRow.getLong(0),
-          if (sigRow.isNullAt(1)) 0L else sigRow.getLong(1))
-        stable = sig == prevSig
-        prevSig = sig
-        if (eIsLoopOwned) e.unpersist(false)
-        e = next
-        eIsLoopOwned = true
-      }
-      // read labels off the stars; the min-agg guarantees ONE row per
-      // node even if maxIter exhausted before a true fixpoint (then
-      // labels are best-effort minima rather than silently duplicated),
-      // and the anti-join restores isolated (self-loop-only) nodes
-      val star = e.select(col("src").as("node"), col("dst").as("label"))
-        .unionByName(e.select(col("dst").as("node"), col("dst").as("label")))
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-      val out = star
-        .unionByName(nodes.join(star.select(col("node")), Seq("node"), "left_anti")
-          .select(col("node"), col("node").as("label")))
-        .localCheckpoint(true)
-      if (eIsLoopOwned) e.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // node universe BEFORE dropping self-loops: a node whose only
+    // edge is (a, a) forms its own component and must appear in the
+    // output (as it does on the union-find and min-label paths), but
+    // the star rounds erase self-loops — restore such nodes at the end
+    val nodes = loop.checkpoint(sym.select(col("src").as("node")).distinct(), eager = true)
+    var e = sym.filter(col("src") =!= col("dst"))
+    var it = 0
+    var prevSig: (Long, Long) = null
+    var stable = false
+    while (!stable && it < maxIter) {
+      // checkpoint EVERY round: one round's plan references `e` four
+      // times (two stars × (neighbor union + min join)), so an
+      // unchecked plan multiplies ~16-25× per round — every-4-rounds
+      // lineage cuts (the min-label loop's cadence) left a plan tree
+      // whose explain string alone OOMed the driver. LAZY checkpoint:
+      // the signature aggregate right below is the materializing
+      // action, so each round is ONE job where eager-checkpoint+agg
+      // was two identical passes.
+      val next = loop.checkpoint(smallStar(largeStar(e)))
+      it += 1
+      val sigRow = next
+        .agg(count(lit(1)), expr("bit_xor(xxhash64(src, dst))")).head()
+      val sig = (sigRow.getLong(0),
+        if (sigRow.isNullAt(1)) 0L else sigRow.getLong(1))
+      stable = sig == prevSig
+      prevSig = sig
+      loop.release(e)
+      e = next
+    }
+    // read labels off the stars; the min-agg guarantees ONE row per
+    // node even if maxIter exhausted before a true fixpoint (then
+    // labels are best-effort minima rather than silently duplicated),
+    // and the anti-join restores isolated (self-loop-only) nodes
+    val star = e.select(col("src").as("node"), col("dst").as("label"))
+      .unionByName(e.select(col("dst").as("node"), col("dst").as("label")))
+      .groupBy(col("node")).agg(min(col("label")).as("label"))
+    loop.checkpoint(star
+      .unionByName(nodes.join(star.select(col("node")), Seq("node"), "left_anti")
+        .select(col("node"), col("node").as("label"))), eager = true)
   }
 
   /**
@@ -305,25 +282,15 @@ object TopicGraph {
 
   private[graft] def connectedComponentsMinLabel(edges: DataFrame,
       maxIter: Int = 30): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var sym = edges.select(col("src"), col("dst"))
+    val symWide = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(lvl)
-    val nEdges = sym.count()
-    val sess = edges.sparkSession
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val symWide = sym
-    sym = sym.repartition(parts, col("src")).persist(lvl)
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).persist(lvl)
+      .distinct()
     // every round is shuffle-LATENCY-bound, not data-bound, at dedup
-    // graph sizes: run the loop's shuffles at the graph's own
-    // parallelism and restore the session setting after (every round
-    // materializes inside the try, so no lazy plan escapes it)
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
+    // graph sizes: the loop's shuffles run at the graph's own parallelism
+    GraphLoop("connectedComponentsMinLabel", symWide, graphParallelism = true) { loop =>
+      val sym = loop.persist(loop.edges.repartition(loop.parallelism, col("src")))
+      var labels = loop.persist(sym.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")))
       var it = 0
       var changed = true
       while (changed && it < maxIter) {
@@ -338,14 +305,13 @@ object TopicGraph {
         // rounds — a 25-link near-dup chain cost 26; with compression
         // the pointer depth halves every round, so convergence is
         // O(log diameter) (measured 6 rounds for the same chain).
-        val cached = propagated.as("a")
+        val cached = loop.persist(propagated.as("a")
           .join(propagated.as("b"), col("a.label") === col("b.node"), "left_outer")
           .select(col("a.node").as("node"),
-            coalesce(col("b.label"), col("a.label")).as("label"))
-          .persist(lvl)
+            coalesce(col("b.label"), col("a.label")).as("label")))
         it += 1
         // lazy: the convergence count / count() below materializes it
-        val next = if (it % 4 == 0) cached.localCheckpoint(eager = false) else cached
+        val next = if (it % 4 == 0) loop.checkpoint(cached) else cached
         // convergence check every 2nd round only (one join+count per
         // check; at worst one extra cheap round past the fixpoint)
         if (it % 2 == 0 || it >= maxIter) {
@@ -354,20 +320,14 @@ object TopicGraph {
             .filter(col("label") =!= col("prev")).count()
           changed = nChanged > 0
         } else next.count()
-        // superseded label cache: unpersist once the next level exists
-        labels.unpersist(false)
-        labels = if (next ne cached) { cached.unpersist(false); next } else next
+        // superseded label cache: freed once the next level exists
+        loop.release(labels, if (next ne cached) cached else null)
+        labels = next
       }
       // labels is |V(component graph)|-sized — orders under the corpus —
-      // so eagerly checkpoint the result and free every loop cache
-      // (cluster caveat as in Redirects: localCheckpoint is executor-
-      // local; long cluster runs snapshot via Checkpoints.runStage)
-      val out = labels.localCheckpoint(true)
-      labels.unpersist(false)
-      sym.unpersist(false)
-      symWide.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+      // so the result is an eager checkpoint and every loop cache is freed
+      loop.checkpoint(labels, eager = true)
+    }
   }
 
   /** Driver-side union-find (path compression + min-root labeling) over
@@ -465,40 +425,26 @@ object TopicGraph {
 
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = edges.sparkSession
-    val e = edges.select(col("src"), col("dst")).persist(lvl)
-    requireOneIdType("pageRank", e)
-    val nEdges = e.count()
-    if (nEdges <= localThreshold) {
-      val out = pageRankLocal(e, iters, damping)
-      e.unpersist(false)
-      return out
-    }
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
+    val edgeRel = edges.select(col("src"), col("dst"))
+    requireOneIdType("pageRank", edgeRel)
+    GraphLoop("pageRank", edgeRel, localThreshold,
+        e => Some(pageRankLocal(e, iters, damping)), graphParallelism = true) { loop =>
+      val e = loop.edges
       // nodes tagged ONCE with has-outgoing: the per-iteration dangling
       // mass then comes from a filter+sum over the rank relation itself
       // (a V-vs-V anti-join per iteration otherwise — at billions of
       // nodes that join is the loop's whole shuffle budget)
-      val nodes = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct()
+      val nodes = loop.persist(graphNodes(e)
         .join(e.select(col("src").as("node")).distinct()
           .withColumn("hasOut", lit(true)), Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut"))
-        .persist(lvl)
+        .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut")))
       val n = nodes.count().toDouble
       val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       // constant across iterations: each edge tagged with its source's
       // out-degree, hash-partitioned on src by the groupBy above
-      val edgesDeg = e.join(outdeg.withColumnRenamed("node", "src"), Seq("src"))
-        .persist(lvl)
+      val edgesDeg = loop.persist(e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
       edgesDeg.count()
-      var ranks = nodes.withColumn("rank", lit(1.0 / n)).persist(lvl)
+      var ranks = loop.persist(nodes.withColumn("rank", lit(1.0 / n)))
       ranks.count()
       var it = 0
       while (it < iters) {
@@ -510,27 +456,21 @@ object TopicGraph {
         // aggregate rides broadcast, never the driver
         val dang = ranks.filter(!col("hasOut"))
           .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-        val stepped = nodes
+        val stepped = loop.persist(nodes
           .join(contrib, Seq("node"), "left_outer")
           .crossJoin(broadcast(dang))
           .select(col("node"), col("hasOut"),
             (lit((1 - damping) / n) + lit(damping) *
-              (coalesce(col("in_sum"), lit(0.0)) + col("dang") / n)).as("rank"))
-          .persist(lvl)
+              (coalesce(col("in_sum"), lit(0.0)) + col("dang") / n)).as("rank")))
         it += 1
         // lazy checkpoint: the count() below materializes it — one job
-        val next = if (it % 4 == 0) stepped.localCheckpoint(eager = false) else stepped
+        val next = if (it % 4 == 0) loop.checkpoint(stepped) else stepped
         next.count()
-        ranks.unpersist(false)
-        ranks = if (next ne stepped) { stepped.unpersist(false); next } else next
+        loop.release(ranks, if (next ne stepped) stepped else null)
+        ranks = next
       }
-      val out = ranks.select(col("node"), col("rank")).localCheckpoint(true)
-      ranks.unpersist(false)
-      edgesDeg.unpersist(false)
-      nodes.unpersist(false)
-      e.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+      loop.checkpoint(ranks.select(col("node"), col("rank")), eager = true)
+    }
   }
 
   /**
@@ -656,42 +596,28 @@ object TopicGraph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int = 5, damping: Double = 0.85,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = edges.sparkSession
-    val e = edges.select(col("src"), col("dst")).persist(lvl)
+    val edgeRel = edges.select(col("src"), col("dst"))
     val sd = seeds.select(seeds.columns.head).toDF("node").distinct()
-    requireOneIdType("personalizedPageRank", e, Some(sd))
-    val nEdges = e.count()
-    if (nEdges <= localThreshold) {
-      val out = pprLocal(e, sd, iters, damping)
-      e.unpersist(false)
-      return out
-    }
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      val nodes0 = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct()
+    requireOneIdType("personalizedPageRank", edgeRel, Some(sd))
+    GraphLoop("personalizedPageRank", edgeRel, localThreshold,
+        e => Some(pprLocal(e, sd, iters, damping)), graphParallelism = true) { loop =>
+      val e = loop.edges
+      val nodes0 = graphNodes(e)
         .join(e.select(col("src").as("node")).distinct()
           .withColumn("hasOut", lit(true)), Seq("node"), "left_outer")
-      val nodes = nodes0
+      val nodes = loop.persist(nodes0
         .join(sd.withColumn("isSeed", lit(true)), Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut"),
-          coalesce(col("isSeed"), lit(false)).as("isSeed"))
-        .persist(lvl)
+          coalesce(col("isSeed"), lit(false)).as("isSeed")))
       val nSeeds = nodes.filter(col("isSeed")).count()
       require(nSeeds > 0, "personalizedPageRank: no seed is a graph node")
       // per-node restart mass m: 1/|S| on seeds, 0 elsewhere — the one
       // constant the whole loop re-reads
       val m = when(col("isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
       val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val edgesDeg = e.join(outdeg.withColumnRenamed("node", "src"), Seq("src"))
-        .persist(lvl)
+      val edgesDeg = loop.persist(e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
       edgesDeg.count()
-      var ranks = nodes.withColumn("rank", m).persist(lvl)
+      var ranks = loop.persist(nodes.withColumn("rank", m))
       ranks.count()
       var it = 0
       while (it < iters) {
@@ -701,27 +627,21 @@ object TopicGraph {
           .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
         val dang = ranks.filter(!col("hasOut"))
           .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-        val stepped = nodes
+        val stepped = loop.persist(nodes
           .join(contrib, Seq("node"), "left_outer")
           .crossJoin(broadcast(dang))
           .select(col("node"), col("hasOut"), col("isSeed"),
             (lit(1 - damping) * m + lit(damping) *
-              (coalesce(col("in_sum"), lit(0.0)) + col("dang") * m)).as("rank"))
-          .persist(lvl)
+              (coalesce(col("in_sum"), lit(0.0)) + col("dang") * m)).as("rank")))
         it += 1
         // lazy checkpoint: the count() below materializes it — one job
-        val next = if (it % 4 == 0) stepped.localCheckpoint(eager = false) else stepped
+        val next = if (it % 4 == 0) loop.checkpoint(stepped) else stepped
         next.count()
-        ranks.unpersist(false)
-        ranks = if (next ne stepped) { stepped.unpersist(false); next } else next
+        loop.release(ranks, if (next ne stepped) stepped else null)
+        ranks = next
       }
-      val out = ranks.select(col("node"), col("rank")).localCheckpoint(true)
-      ranks.unpersist(false)
-      edgesDeg.unpersist(false)
-      nodes.unpersist(false)
-      e.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+      loop.checkpoint(ranks.select(col("node"), col("rank")), eager = true)
+    }
   }
 
   /** Driver-side PPR twin — same math, same schema as the distributed
@@ -790,78 +710,80 @@ object TopicGraph {
    */
   def hopDistance(edges: DataFrame, seeds: DataFrame,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).persist(lvl)
+    val edgeRel = edges.select(col("src"), col("dst"))
     val sd = seeds.select(seeds.columns.head).toDF("node").distinct()
-    requireOneIdType("hopDistance", e, Some(sd))
-    val nEdges = e.count()
-    if (nEdges <= localThreshold) {
-      val out = hopDistanceLocal(e, sd)
-      e.unpersist(false)
-      return out
-    }
-    // Broadcast gate in ROWS, known EXACTLY each round from the layer
-    // counts (no estimator guesswork): frontier/visited rows are
-    // (id, int) pairs, so 4M rows is ~64 MB framed — far under the
-    // broadcast cap, and the same judgment AQE would make if the
-    // checkpointed relations carried statistics (they do not: a
-    // LogicalRDD defaults to sizeInBytes = MAX, which is why the
-    // planner never found these broadcasts itself).
-    val bcastRows = 4000000L
-    var dist = sd.select(col("node"), lit(0).as("dist")).localCheckpoint(true)
-    var frontier = dist
-    var frontierCount = dist.count()
-    var distCount = frontierCount
-    var layer = 0
-    var layersSinceCompact = 0
-    while (frontierCount > 0) {
-      layer += 1
-      // Per-round plan, small-frontier regime (the common one: BFS
-      // frontiers are a sliver of V on a high-diameter graph): the
-      // frontier BROADCASTS into the expansion join, so the persisted
-      // edge relation is probed in place — never shuffled, never
-      // sorted; the visited set broadcasts into the anti-join, which
-      // then runs map-side BEFORE the distinct so duplicate hits die
-      // before the round's one exchange. Measured on the forced-
-      // distributed 10x leg (1M edges, ecc≈200): the old plan
-      // sort-merge-joined the full edge relation EVERY round — ~2.4
-      // s/round, 533 s total; this shape is one cached-edge scan +
-      // one tiny exchange per round. Above `bcastRows` the round
-      // falls back to the shuffle plan (distinct first, then the
-      // anti-join shuffles each candidate once) — the 100 TB shape
-      // when a frontier outgrows a broadcast.
-      val expanded =
-        (if (frontierCount <= bcastRows) broadcast(frontier) else frontier)
-          .join(e, frontier("node") === e("src"))
-          .select(col("dst").as("node"))
-      val next =
-        (if (distCount <= bcastRows)
-          expanded.join(broadcast(dist), Seq("node"), "left_anti").distinct()
-        else
-          expanded.distinct().join(dist, Seq("node"), "left_anti"))
-          .select(col("node"), lit(layer).as("dist"))
-          .localCheckpoint(eager = false) // LAZY: the count() below is
-      // the materializing action — one job per layer where the eager
-      // checkpoint + count pair cost two identical passes
-      frontierCount = next.count()
-      distCount += frontierCount
-      dist = dist.unionByName(next)
-      frontier = next
-      // COMPACT the visited set every 8 layers: the anti-join above
-      // scans every relation in `dist`'s union, so a lazy
-      // layer-per-round union makes round L cost O(L) scans — O(ecc²)
-      // total on a high-diameter graph (measured 20+ min at ecc ≈ 200,
-      // 50k nodes). Periodic re-checkpointing bounds the union width
-      // at 8 for O(V·ecc/8) total compaction writes — the distributed
-      // BFS trade a long-path graph actually wants.
-      layersSinceCompact += 1
-      if (layersSinceCompact == 8 && frontierCount > 0) {
-        dist = dist.localCheckpoint(true)
-        layersSinceCompact = 0
+    requireOneIdType("hopDistance", edgeRel, Some(sd))
+    GraphLoop("hopDistance", edgeRel, localThreshold,
+        e => Some(hopDistanceLocal(e, sd))) { loop =>
+      val e = loop.edges
+      // Broadcast gate in ROWS, known EXACTLY each round from the layer
+      // counts (no estimator guesswork): frontier/visited rows are
+      // (id, int) pairs, so 4M rows is ~64 MB framed — far under the
+      // broadcast cap. The planner cannot find these broadcasts itself:
+      // a checkpoint's LogicalRDD carries the size estimate of the plan
+      // it was cut from (Spark 4.1), never the exact row count, so a
+      // layer that kept a sliver of its input is still sized as the
+      // whole input, and a join on it plans as a SortMergeJoin.
+      val bcastRows = 4000000L
+      var dist = loop.checkpoint(sd.select(col("node"), lit(0).as("dist")), eager = true)
+      var frontier = dist
+      var frontierCount = dist.count()
+      var distCount = frontierCount
+      var layer = 0
+      var layersSinceCompact = 0
+      var uncompacted = Vector(dist)
+      while (frontierCount > 0) {
+        layer += 1
+        // Per-round plan, small-frontier regime (the common one: BFS
+        // frontiers are a sliver of V on a high-diameter graph): the
+        // frontier BROADCASTS into the expansion join, so the persisted
+        // edge relation is probed in place — never shuffled, never
+        // sorted; the visited set broadcasts into the anti-join, which
+        // then runs map-side BEFORE the distinct so duplicate hits die
+        // before the round's one exchange. Measured on the forced-
+        // distributed 10x leg (1M edges, ecc≈200): the old plan
+        // sort-merge-joined the full edge relation EVERY round — ~2.4
+        // s/round, 533 s total; this shape is one cached-edge scan +
+        // one tiny exchange per round. Above `bcastRows` the round
+        // falls back to the shuffle plan (distinct first, then the
+        // anti-join shuffles each candidate once) — the 100 TB shape
+        // when a frontier outgrows a broadcast.
+        val expanded =
+          (if (frontierCount <= bcastRows) broadcast(frontier) else frontier)
+            .join(e, frontier("node") === e("src"))
+            .select(col("dst").as("node"))
+        // LAZY: the count() below is the materializing action — one job
+        // per layer where the eager checkpoint + count pair cost two
+        // identical passes
+        val next = loop.checkpoint(
+          (if (distCount <= bcastRows)
+            expanded.join(broadcast(dist), Seq("node"), "left_anti").distinct()
+          else
+            expanded.distinct().join(dist, Seq("node"), "left_anti"))
+            .select(col("node"), lit(layer).as("dist")))
+        frontierCount = next.count()
+        distCount += frontierCount
+        dist = dist.unionByName(next)
+        frontier = next
+        uncompacted :+= next
+        // COMPACT the visited set every 8 layers: the anti-join above
+        // scans every relation in `dist`'s union, so a lazy
+        // layer-per-round union makes round L cost O(L) scans — O(ecc²)
+        // total on a high-diameter graph (measured 20+ min at ecc ≈ 200,
+        // 50k nodes). Periodic re-checkpointing bounds the union width
+        // at 8 for O(V·ecc/8) total compaction writes — the distributed
+        // BFS trade a long-path graph actually wants. The compacted
+        // layers are superseded then, all but the frontier.
+        layersSinceCompact += 1
+        if (layersSinceCompact == 8 && frontierCount > 0) {
+          dist = loop.checkpoint(dist, eager = true)
+          loop.release(uncompacted.filterNot(_ eq frontier): _*)
+          uncompacted = Vector(dist, frontier)
+          layersSinceCompact = 0
+        }
       }
+      dist
     }
-    e.unpersist(false)
-    dist
   }
 
   /**
@@ -906,24 +828,20 @@ object TopicGraph {
     * relation at graph scale. */
   def hyperBallRegisters(edges: DataFrame, radius: Int): DataFrame = {
     require(radius >= 0, s"radius must be >= 0, got $radius")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    e.count()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    var regs = Sketches.hllRegisters(nodes, col("node").cast("string"),
-      Seq("node")).localCheckpoint(true)
-    var r = 0
-    while (r < radius) {
-      regs = regs
-        .unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("bucket"), col("rho")))
-        .groupBy(col("node"), col("bucket")).agg(max(col("rho")).as("rho"))
-        .localCheckpoint(true)
-      r += 1
+    GraphLoop("hyperBallRegisters", distinctEdges(edges)) { loop =>
+      val e = loop.edges
+      var regs = loop.checkpoint(Sketches.hllRegisters(graphNodes(e),
+        col("node").cast("string"), Seq("node")), eager = true)
+      for (_ <- 1 to radius) {
+        val next = loop.checkpoint(regs
+          .unionByName(e.join(regs, regs("node") === e("dst"))
+            .select(e("src").as("node"), col("bucket"), col("rho")))
+          .groupBy(col("node"), col("bucket")).agg(max(col("rho")).as("rho")), eager = true)
+        loop.release(regs)
+        regs = next
+      }
+      regs
     }
-    e.unpersist(false)
-    regs
   }
 
   /**
@@ -940,31 +858,39 @@ object TopicGraph {
    */
   def hyperBallPackedRegisters(edges: DataFrame, radius: Int): DataFrame = {
     require(radius >= 0, s"radius must be >= 0, got $radius")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    e.count()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    var regs = nodes.select(col("node"),
-        Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
-      .localCheckpoint(true)
-    var r = 0
-    while (r < radius) {
-      // intermediate rounds checkpoint LAZILY (plan truncated either
-      // way): each round's deferred result stage is computed — and its
-      // partitions persisted — inside the NEXT round's first pass, so
-      // the per-round persist job disappears; the FINAL round is eager
-      // so the chain settles while the edge cache is still live (the
-      // unpersist below would otherwise force recomputes of the
-      // distinct)
-      regs = Sketches.hllPackedMerge(
-        regs.unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("regs"))),
-        Seq("node")).localCheckpoint(eager = r + 1 == radius)
-      r += 1
+    GraphLoop("hyperBall", distinctEdges(edges)) { loop =>
+      var regs = packedSingletons(loop)
+      for (_ <- 1 to radius) regs = packedRound(loop, regs)
+      regs
     }
-    e.unpersist(false)
-    regs
+  }
+
+  /** The edge relation of the HyperBall loops: (src, dst), distinct. */
+  private def distinctEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst")).distinct()
+
+  private def graphNodes(e: DataFrame): DataFrame =
+    e.select(col("src").as("node")).unionByName(e.select(col("dst").as("node"))).distinct()
+
+  /** Round 0 of the packed HyperBall loops: each node's register file of
+    * the singleton {v}, eagerly checkpointed. */
+  private def packedSingletons(loop: GraphLoop): DataFrame =
+    loop.checkpoint(graphNodes(loop.edges).select(col("node"),
+      Sketches.hllPackedSingleton(col("node").cast("string")).as("regs")), eager = true)
+
+  /** One packed HyperBall round, shared by the four packed loops: every
+    * node's file max-merged with its out-neighbors' files. The round is
+    * a LAZY checkpoint (plan truncated either way): its deferred result
+    * stage is computed — and its partitions persisted — inside the next
+    * round's first pass, so no round pays a persist job of its own; the
+    * last round runs in the loop's own action or in the scope's finish,
+    * while the edge cache is still live. */
+  private def packedRound(loop: GraphLoop, regs: DataFrame): DataFrame = {
+    val e = loop.edges
+    loop.checkpoint(Sketches.hllPackedMerge(
+      regs.unionByName(e.join(regs, regs("node") === e("dst"))
+        .select(e("src").as("node"), col("regs"))),
+      Seq("node")))
   }
 
   /**
@@ -995,52 +921,37 @@ object TopicGraph {
     require(maxRadius >= 0, s"maxRadius must be >= 0, got $maxRadius")
     require(fracNum > 0 && fracDen >= fracNum,
       s"fraction must be a rational in (0,1], got $fracNum/$fracDen")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    require(e.count() > 0, "neighborhoodFunction: empty edge relation")
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    var regs = nodes.select(col("node"),
-        Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
-      .localCheckpoint(true)
-    def roundRow(r: Int, rg: DataFrame): DataFrame =
-      Sketches.hllEstimateFromPacked(rg, Seq("node"))
-        .agg(count(lit(1)).as("n_nodes"),
-          sum(col("reg_sum").cast("decimal(38,0)")).cast("string")
-            .as("reg_sum_total"),
-          sum(expr(s"CAST('${Sketches.HllEstE4Num}' AS DECIMAL(38,0))" +
-            " DIV CAST(reg_sum AS DECIMAL(38,0))")).as("n_sum_est_e4"))
-        .select(lit(r).as("r"), col("n_nodes"), col("reg_sum_total"),
-          col("n_sum_est_e4"))
-    var rows = Seq(roundRow(0, regs))
-    var r = 1
-    while (r <= maxRadius) {
-      // lazy intermediates, eager FINAL round: each round's deferred
-      // result stage materializes inside the next round's first pass
-      // (no per-round persist job), and the final eager round settles
-      // the chain while the edge cache is still live — the read-off
-      // rows only execute in the caller's terminal action
-      regs = Sketches.hllPackedMerge(
-        regs.unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("regs"))),
-        Seq("node")).localCheckpoint(eager = r == maxRadius)
-      rows = rows :+ roundRow(r, regs)
-      r += 1
+    GraphLoop("neighborhoodFunction", distinctEdges(edges), nonEmpty = true) { loop =>
+      var regs = packedSingletons(loop)
+      def roundRow(r: Int, rg: DataFrame): DataFrame =
+        Sketches.hllEstimateFromPacked(rg, Seq("node"))
+          .agg(count(lit(1)).as("n_nodes"),
+            sum(col("reg_sum").cast("decimal(38,0)")).cast("string")
+              .as("reg_sum_total"),
+            sum(expr(s"CAST('${Sketches.HllEstE4Num}' AS DECIMAL(38,0))" +
+              " DIV CAST(reg_sum AS DECIMAL(38,0))")).as("n_sum_est_e4"))
+          .select(lit(r).as("r"), col("n_nodes"), col("reg_sum_total"),
+            col("n_sum_est_e4"))
+      var rows = Seq(roundRow(0, regs))
+      for (r <- 1 to maxRadius) {
+        // the read-off rows only execute in the caller's terminal action
+        regs = packedRound(loop, regs)
+        rows = rows :+ roundRow(r, regs)
+      }
+      // the read-off table is maxRadius+1 rows — the single-partition
+      // windows below are driver-sized by construction
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.orderBy(col("r"))
+      val wAll = Window.orderBy(col("r"))
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      rows.reduce(_ unionByName _)
+        .withColumn("is_fixpoint", coalesce(
+          col("reg_sum_total") === lag(col("reg_sum_total"), 1).over(w),
+          lit(false)))
+        .withColumn("ed_reached",
+          col("n_sum_est_e4") * fracDen >=
+            max(col("n_sum_est_e4")).over(wAll) * fracNum)
     }
-    e.unpersist(false)
-    // the read-off table is maxRadius+1 rows — the single-partition
-    // windows below are driver-sized by construction
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.orderBy(col("r"))
-    val wAll = Window.orderBy(col("r"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    rows.reduce(_ unionByName _)
-      .withColumn("is_fixpoint", coalesce(
-        col("reg_sum_total") === lag(col("reg_sum_total"), 1).over(w),
-        lit(false)))
-      .withColumn("ed_reached",
-        col("n_sum_est_e4") * fracDen >=
-          max(col("n_sum_est_e4")).over(wAll) * fracNum)
   }
 
   /**
@@ -1066,44 +977,31 @@ object TopicGraph {
    */
   def harmonicCentrality(edges: DataFrame, radius: Int): DataFrame = {
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    require(e.count() > 0, "harmonicCentrality: empty edge relation")
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    var regs = nodes.select(col("node"),
-        Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
-      .localCheckpoint(true)
-    def lcm(a: Long, b: Long): Long = a / BigInt(a).gcd(BigInt(b)).toLong * b
-    val bigL = (1L to radius.toLong).reduce(lcm)
-    def weight(r: Int): Long =
-      if (r == 0) -bigL
-      else if (r == radius) bigL / radius
-      else bigL / r - bigL / (r + 1)
-    def weighted(r: Int, rg: DataFrame): DataFrame =
-      Sketches.hllEstimateFromPacked(rg, Seq("node"))
-        .select(col("node"),
-          (expr(s"CAST('${Sketches.HllEstE4Num}' AS DECIMAL(38,0))" +
-            " DIV CAST(reg_sum AS DECIMAL(38,0))") * lit(weight(r))).as("part"))
-    var parts = Seq(weighted(0, regs))
-    var r = 1
-    while (r <= radius) {
-      // lazy intermediates, eager final round (see neighborhoodFunction:
-      // per-round persist jobs disappear; the weighted read-offs execute
-      // in the caller's terminal action against the settled chain)
-      regs = Sketches.hllPackedMerge(
-        regs.unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("regs"))),
-        Seq("node")).localCheckpoint(eager = r == radius)
-      parts = parts :+ weighted(r, regs)
-      r += 1
+    GraphLoop("harmonicCentrality", distinctEdges(edges), nonEmpty = true) { loop =>
+      var regs = packedSingletons(loop)
+      def lcm(a: Long, b: Long): Long = a / BigInt(a).gcd(BigInt(b)).toLong * b
+      val bigL = (1L to radius.toLong).reduce(lcm)
+      def weight(r: Int): Long =
+        if (r == 0) -bigL
+        else if (r == radius) bigL / radius
+        else bigL / r - bigL / (r + 1)
+      def weighted(r: Int, rg: DataFrame): DataFrame =
+        Sketches.hllEstimateFromPacked(rg, Seq("node"))
+          .select(col("node"),
+            (expr(s"CAST('${Sketches.HllEstE4Num}' AS DECIMAL(38,0))" +
+              " DIV CAST(reg_sum AS DECIMAL(38,0))") * lit(weight(r))).as("part"))
+      var parts = Seq(weighted(0, regs))
+      for (r <- 1 to radius) {
+        // the weighted read-offs execute in the caller's terminal action
+        regs = packedRound(loop, regs)
+        parts = parts :+ weighted(r, regs)
+      }
+      parts.reduce(_ unionByName _)
+        .groupBy(col("node"))
+        .agg(sum(col("part")).as("h_scaled"))
+        .select(col("node"), col("h_scaled"),
+          round(col("h_scaled").cast("double") / lit(1e4 * bigL), 6).as("h_harmonic"))
     }
-    e.unpersist(false)
-    parts.reduce(_ unionByName _)
-      .groupBy(col("node"))
-      .agg(sum(col("part")).as("h_scaled"))
-      .select(col("node"), col("h_scaled"),
-        round(col("h_scaled").cast("double") / lit(1e4 * bigL), 6).as("h_harmonic"))
   }
 
   /**
@@ -1125,53 +1023,45 @@ object TopicGraph {
   def effectiveDiameter(edges: DataFrame, fraction: Double = 0.9,
       maxRadius: Int = 64): (Int, Seq[Double], Int) = {
     require(fraction > 0 && fraction <= 1, s"fraction in (0,1], got $fraction")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
     // empty graph: refuse loudly rather than NPE on the NULL sum the
     // empty register relation would feed nfun (sig() already coalesces)
-    require(e.count() > 0, "effectiveDiameter: empty edge relation")
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    // packed register propagation (one array row per node, see
-    // hyperBallPackedRegisters) — the fixpoint signature hashes the
-    // whole register vector per node, same one-tiny-aggregate cost
-    var regs = nodes.select(col("node"),
-        Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
-      .localCheckpoint(true)
-    def nfun(rg: DataFrame): Double =
-      Sketches.hllEstimateFromPacked(rg, Seq("node"))
-        .agg(coalesce(sum(col("n_distinct_est")), lit(0.0))).head().getDouble(0)
-    def sig(rg: DataFrame): (Long, Long) = {
-      val row = rg.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(node, regs))"), lit(0L))).head()
-      (row.getLong(0), row.getLong(1))
-    }
-    val ns = Seq.newBuilder[Double]
-    ns += nfun(regs)
-    var prev = sig(regs)
-    var rounds = 0
-    var fixed = false
-    while (!fixed && rounds < maxRadius) {
-      // lazy: the per-round fixpoint signature below is the
-      // materializing action — one job per round instead of two
-      val next = Sketches.hllPackedMerge(
-        regs.unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("regs"))),
-        Seq("node")).localCheckpoint(eager = false)
-      val cur = sig(next)
-      if (cur == prev) fixed = true
-      else {
-        rounds += 1
-        ns += nfun(next)
-        prev = cur
-        regs = next
+    GraphLoop("effectiveDiameter", distinctEdges(edges), nonEmpty = true) { loop =>
+      // packed register propagation (one array row per node, see
+      // hyperBallPackedRegisters) — the fixpoint signature hashes the
+      // whole register vector per node, same one-tiny-aggregate cost
+      var regs = packedSingletons(loop)
+      def nfun(rg: DataFrame): Double =
+        Sketches.hllEstimateFromPacked(rg, Seq("node"))
+          .agg(coalesce(sum(col("n_distinct_est")), lit(0.0))).head().getDouble(0)
+      def sig(rg: DataFrame): (Long, Long) = {
+        val row = rg.agg(count(lit(1)),
+          coalesce(expr("bit_xor(xxhash64(node, regs))"), lit(0L))).head()
+        (row.getLong(0), row.getLong(1))
       }
+      val ns = Seq.newBuilder[Double]
+      ns += nfun(regs)
+      var prev = sig(regs)
+      var rounds = 0
+      var fixed = false
+      while (!fixed && rounds < maxRadius) {
+        // the per-round fixpoint signature below is the round's
+        // materializing action — one job per round instead of two
+        val next = packedRound(loop, regs)
+        val cur = sig(next)
+        if (cur == prev) fixed = true
+        else {
+          rounds += 1
+          ns += nfun(next)
+          prev = cur
+          loop.release(regs)
+          regs = next
+        }
+      }
+      val all = ns.result()
+      val target = fraction * all.last
+      val eff = all.indexWhere(_ >= target - 1e-9)
+      (rounds, all, eff)
     }
-    e.unpersist(false)
-    val all = ns.result()
-    val target = fraction * all.last
-    val eff = all.indexWhere(_ >= target - 1e-9)
-    (rounds, all, eff)
   }
 
   /**
@@ -1200,35 +1090,28 @@ object TopicGraph {
   def randomWalks(edges: DataFrame, starts: DataFrame, steps: Int,
       seed: String = "w"): DataFrame = {
     require(steps >= 0, s"steps must be >= 0, got $steps")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    e.count()
-    var cur = starts.select(starts.columns.head).toDF("node").distinct()
-      .select(col("node").as("start"), col("node"))
-      .localCheckpoint(true)
-    val layers = Seq.newBuilder[DataFrame]
-    layers += cur.select(col("start"), lit(0).as("step"), col("node"))
-    var t = 1
-    while (t <= steps) {
-      val score = conv(substring(md5(concat_ws(":", lit(seed),
-        col("start").cast("string"), lit(t).cast("string"),
-        col("dst").cast("string"))), 1, 15), 16, 10).cast("long")
-      // lazy intermediates, eager FINAL step: each step's deferred
-      // result stage materializes inside the next step's first pass (no
-      // per-step persist job); the final eager step settles the chain
-      // while the edge cache is still live — the layer union only
-      // executes in the caller's terminal action
-      val next = cur.join(e, cur("node") === e("src"))
-        .select(col("start"), struct(score.as("sc"), col("dst")).as("cand"))
-        .groupBy(col("start")).agg(min(col("cand")).as("m"))
-        .select(col("start"), col("m").getField("dst").as("node"))
-        .localCheckpoint(eager = t == steps)
-      layers += next.select(col("start"), lit(t).as("step"), col("node"))
-      cur = next
-      t += 1
+    GraphLoop("randomWalks", distinctEdges(edges)) { loop =>
+      val e = loop.edges
+      var cur = loop.checkpoint(starts.select(starts.columns.head).toDF("node").distinct()
+        .select(col("node").as("start"), col("node")), eager = true)
+      val layers = Seq.newBuilder[DataFrame]
+      layers += cur.select(col("start"), lit(0).as("step"), col("node"))
+      for (t <- 1 to steps) {
+        val score = conv(substring(md5(concat_ws(":", lit(seed),
+          col("start").cast("string"), lit(t).cast("string"),
+          col("dst").cast("string"))), 1, 15), 16, 10).cast("long")
+        // lazy steps: each step's deferred result stage materializes
+        // inside the next step's first pass (no per-step persist job),
+        // the last in the scope's finish — the layer union only executes
+        // in the caller's terminal action
+        cur = loop.checkpoint(cur.join(e, cur("node") === e("src"))
+          .select(col("start"), struct(score.as("sc"), col("dst")).as("cand"))
+          .groupBy(col("start")).agg(min(col("cand")).as("m"))
+          .select(col("start"), col("m").getField("dst").as("node")))
+        layers += cur.select(col("start"), lit(t).as("step"), col("node"))
+      }
+      layers.result().reduce(_ unionByName _)
     }
-    e.unpersist(false)
-    layers.result().reduce(_ unionByName _)
   }
 
   /**
@@ -1262,56 +1145,50 @@ object TopicGraph {
     require(steps >= 0, s"steps must be >= 0, got $steps")
     require(p >= 1 && p <= 8 && q >= 1 && q <= 8,
       s"node2vec: p=$p, q=$q must be in [1, 8] (integer inverse biases)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    e.count()
-    def hashKey(t: Int): org.apache.spark.sql.Column =
-      conv(substring(md5(concat_ws(":",
-      lit(seed), col("start").cast("string"), lit(t).cast("string"),
-      col("dst").cast("string"))), 1, 15), 16, 10).cast("long")
-    var cur = starts.select(starts.columns.head).toDF("node").distinct()
-      .select(col("node").as("start"), col("node"))
-      .localCheckpoint(true)
-    val layers = Seq.newBuilder[DataFrame]
-    layers += cur.select(col("start"), lit(0).as("step"), col("node"))
-    // step 1: unbiased (no predecessor), but carry prev forward
-    var frontier: DataFrame = null // (start, prev, node)
-    var t = 1
-    while (t <= steps) {
-      // lazy intermediates, eager final step (see randomWalks): the
-      // per-step persist jobs disappear into the successor passes
-      val next = if (t == 1) {
-        cur.join(e, cur("node") === e("src"))
-          .select(col("start"), col("node").as("prev0"),
-            struct(hashKey(1).as("sc"), col("dst")).as("cand"))
-          .groupBy(col("start")).agg(min(col("cand")).as("m"),
-            first(col("prev0")).as("p0")) // start node is unique per group
-          .select(col("start"), col("p0").as("prev"),
-            col("m").getField("dst").as("node"))
-          .localCheckpoint(eager = t == steps)
-      } else {
-        val cands = frontier.join(e, frontier("node") === e("src"))
-          .select(col("start"), col("prev"), col("node"), col("dst"),
-            hashKey(t).as("hk"))
-        val tri = e.select(col("src").as("prev"), col("dst").as("dst"),
-          lit(true).as("isTri"))
-        cands.join(tri, Seq("prev", "dst"), "left_outer")
-          .select(col("start"), col("node").as("newPrev"),
-            struct((col("hk") * when(col("dst") === col("prev"), lit(p.toLong))
-              .when(col("isTri"), lit(1L))
-              .otherwise(lit(q.toLong))).as("sc"), col("dst")).as("cand"))
-          .groupBy(col("start")).agg(min(col("cand")).as("m"),
-            first(col("newPrev")).as("np"))
-          .select(col("start"), col("np").as("prev"),
-            col("m").getField("dst").as("node"))
-          .localCheckpoint(eager = t == steps)
+    GraphLoop("node2vecWalks", distinctEdges(edges)) { loop =>
+      val e = loop.edges
+      def hashKey(t: Int): org.apache.spark.sql.Column =
+        conv(substring(md5(concat_ws(":",
+        lit(seed), col("start").cast("string"), lit(t).cast("string"),
+        col("dst").cast("string"))), 1, 15), 16, 10).cast("long")
+      val cur = loop.checkpoint(starts.select(starts.columns.head).toDF("node").distinct()
+        .select(col("node").as("start"), col("node")), eager = true)
+      val layers = Seq.newBuilder[DataFrame]
+      layers += cur.select(col("start"), lit(0).as("step"), col("node"))
+      // step 1: unbiased (no predecessor), but carry prev forward
+      var frontier: DataFrame = null // (start, prev, node)
+      for (t <- 1 to steps) {
+        // lazy steps (see randomWalks): the per-step persist jobs
+        // disappear into the successor passes
+        val next = loop.checkpoint(if (t == 1) {
+          cur.join(e, cur("node") === e("src"))
+            .select(col("start"), col("node").as("prev0"),
+              struct(hashKey(1).as("sc"), col("dst")).as("cand"))
+            .groupBy(col("start")).agg(min(col("cand")).as("m"),
+              first(col("prev0")).as("p0")) // start node is unique per group
+            .select(col("start"), col("p0").as("prev"),
+              col("m").getField("dst").as("node"))
+        } else {
+          val cands = frontier.join(e, frontier("node") === e("src"))
+            .select(col("start"), col("prev"), col("node"), col("dst"),
+              hashKey(t).as("hk"))
+          val tri = e.select(col("src").as("prev"), col("dst").as("dst"),
+            lit(true).as("isTri"))
+          cands.join(tri, Seq("prev", "dst"), "left_outer")
+            .select(col("start"), col("node").as("newPrev"),
+              struct((col("hk") * when(col("dst") === col("prev"), lit(p.toLong))
+                .when(col("isTri"), lit(1L))
+                .otherwise(lit(q.toLong))).as("sc"), col("dst")).as("cand"))
+            .groupBy(col("start")).agg(min(col("cand")).as("m"),
+              first(col("newPrev")).as("np"))
+            .select(col("start"), col("np").as("prev"),
+              col("m").getField("dst").as("node"))
+        })
+        layers += next.select(col("start"), lit(t).as("step"), col("node"))
+        frontier = next
       }
-      layers += next.select(col("start"), lit(t).as("step"), col("node"))
-      frontier = next
-      t += 1
+      layers.result().reduce(_ unionByName _)
     }
-    e.unpersist(false)
-    layers.result().reduce(_ unionByName _)
   }
 
   /** Driver-side BFS twin — same (node, dist) schema and semantics as
@@ -1375,25 +1252,10 @@ object TopicGraph {
    */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))
-        .filter(col("src") =!= col("dst")))
-      .distinct().persist(lvl)
-    val nEdges = sym.count()
-    if (nEdges <= localThreshold) {
-      val out = kCoreLocal(sym, k)
-      sym.unpersist(false)
-      return out
-    }
-    val sess = sym.sparkSession
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      var e = sym.localCheckpoint(true)
+    GraphLoop("kCore", simpleSymmetric(edges), localThreshold, s => Some(kCoreLocal(s, k)),
+        graphParallelism = true) { loop =>
+      var e = loop.checkpoint(loop.edges, eager = true)
+      var spent = Seq.empty[DataFrame] // read by e until e is computed
       var nNodes = -1L
       var it = 0
       var stable = false
@@ -1403,28 +1265,32 @@ object TopicGraph {
         // materializing action, and the next round's keep-count pulls
         // the shrunken edge relation through its (marked) checkpoint —
         // one job per round where eager-checkpoint+count cost three
-        val keep = deg.filter(col("core_deg") >= k)
-          .select(col("src").as("n")).localCheckpoint(eager = false)
+        val keep = loop.checkpoint(deg.filter(col("core_deg") >= k)
+          .select(col("src").as("n")))
         val nKeep = keep.count()
+        loop.release(spent: _*)
         if (nKeep == nNodes) stable = true
         else {
           nNodes = nKeep
-          val next = e
+          spent = Seq(e, keep)
+          e = loop.checkpoint(e
             .join(keep.withColumnRenamed("n", "src"), Seq("src"))
             .join(keep.withColumnRenamed("n", "dst"), Seq("dst"))
-            .select(col("src"), col("dst"))
-            .localCheckpoint(eager = false)
-          e = next
+            .select(col("src"), col("dst")))
           it += 1
         }
       }
-      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
-        .localCheckpoint(true)
-    } finally {
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      sym.unpersist(false)
+      loop.checkpoint(e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg")),
+        eager = true)
     }
   }
+
+  /** Both directions of every non-loop edge, distinct. */
+  private def simpleSymmetric(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))
+        .filter(col("src") =!= col("dst")))
+      .distinct()
 
   /** Driver-side peel over a collected small edge list — same
     * fixpoint, same (node, core_deg) schema as the distributed loop. */
@@ -1491,28 +1357,12 @@ object TopicGraph {
    */
   def labelPropagation(edges: DataFrame, iters: Int = 3,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))
-        .filter(col("src") =!= col("dst")))
-      .distinct().persist(lvl)
-    val nEdges = sym.count()
-    if (nEdges <= localThreshold) {
-      val out = lpaLocal(sym, iters)
-      sym.unpersist(false)
-      return out
-    }
-    val sess = sym.sparkSession
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      var labels = sym.select(col("src").as("node")).distinct()
-        .withColumn("community", col("node")).localCheckpoint(true)
-      var it = 0
-      while (it < iters) {
+    GraphLoop("labelPropagation", simpleSymmetric(edges), localThreshold,
+        s => Some(lpaLocal(s, iters)), graphParallelism = true) { loop =>
+      val sym = loop.edges
+      var labels = loop.checkpoint(sym.select(col("src").as("node")).distinct()
+        .withColumn("community", col("node")), eager = true)
+      for (_ <- 1 to iters) {
         val nbr = sym
           .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
           .groupBy(col("src").as("node"), col("community"))
@@ -1520,22 +1370,15 @@ object TopicGraph {
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("node"))
           .orderBy(col("c").desc, col("community").asc)
-        // intermediate rounds checkpoint LAZILY (the plan is truncated
-        // either way; the final round's eager checkpoint materializes
-        // the whole chain in one job — sym must still be persisted
-        // then, which the surrounding try/finally guarantees). iters
-        // jobs collapse to one.
-        labels = nbr
+        // every round checkpoints LAZILY (the plan is truncated either
+        // way); the scope's finish materializes the whole chain in one
+        // job while sym is still cached. iters jobs collapse to one.
+        labels = loop.checkpoint(nbr
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
-          .select(col("node"), col("community"))
-          .localCheckpoint(eager = it + 1 == iters)
-        it += 1
+          .select(col("node"), col("community")))
       }
       labels
-    } finally {
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      sym.unpersist(false)
     }
   }
 
@@ -1612,29 +1455,15 @@ object TopicGraph {
   def hits(edges: DataFrame, iters: Int = 4,
       localThreshold: Long = 4000000L): DataFrame = {
     require(iters >= 1, s"hits: iters=$iters must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = edges.sparkSession
-    val e = edges.select(col("src"), col("dst")).persist(lvl)
-    requireOneIdType("hits", e)
-    val nEdges = e.count()
-    require(nEdges > 0, "hits: empty edge relation")
-    if (nEdges <= localThreshold) {
-      val out = hitsLocal(e, iters)
-      e.unpersist(false)
-      return out
-    }
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      val nodes = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct().persist(lvl)
-      var auth = nodes.withColumn("auth", lit(1.0)).localCheckpoint(true)
+    val edgeRel = edges.select(col("src"), col("dst"))
+    requireOneIdType("hits", edgeRel)
+    GraphLoop("hits", edgeRel, localThreshold, e => Some(hitsLocal(e, iters)),
+        graphParallelism = true, nonEmpty = true) { loop =>
+      val e = loop.edges
+      val nodes = loop.persist(graphNodes(e))
+      var auth = loop.checkpoint(nodes.withColumn("auth", lit(1.0)), eager = true)
       var hub: DataFrame = null
-      var it = 0
-      while (it < iters) {
+      for (_ <- 1 to iters) {
         val hRaw = e
           .join(auth.select(col("node").as("dst"), col("auth")), Seq("dst"))
           .groupBy(col("src").as("node")).agg(sum(col("auth")).as("hs"))
@@ -1649,34 +1478,25 @@ object TopicGraph {
         // result stage is computed — and persisted — inside the auth
         // half-step's eager job below, dropping the separate hub
         // persist job each iteration
-        val newHub = nodes.join(hRaw, Seq("node"), "left_outer")
+        val newHub = loop.checkpoint(nodes.join(hRaw, Seq("node"), "left_outer")
           .crossJoin(broadcast(hTot))
           .select(col("node"),
-            (coalesce(col("hs"), lit(0.0)) / col("ht")).as("hub"))
-          .localCheckpoint(eager = false)
+            (coalesce(col("hs"), lit(0.0)) / col("ht")).as("hub")))
         val aRaw = e
           .join(newHub.select(col("node").as("src"), col("hub")), Seq("src"))
           .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("as_"))
         val aTot = aRaw.agg(sum(col("as_")).as("at"))
-        val stepped = nodes.join(aRaw, Seq("node"), "left_outer")
+        val stepped = loop.checkpoint(nodes.join(aRaw, Seq("node"), "left_outer")
           .crossJoin(broadcast(aTot))
           .select(col("node"),
-            (coalesce(col("as_"), lit(0.0)) / col("at")).as("auth"))
-          .localCheckpoint(true)
-        it += 1
-        auth.unpersist(false)
-        if (hub != null) hub.unpersist(false)
+            (coalesce(col("as_"), lit(0.0)) / col("at")).as("auth")), eager = true)
+        loop.release(auth, hub)
         hub = newHub
         auth = stepped
       }
-      val out = hub.join(auth, Seq("node"))
-        .select(col("node"), col("hub"), col("auth")).localCheckpoint(true)
-      hub.unpersist(false)
-      auth.unpersist(false)
-      nodes.unpersist(false)
-      e.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+      loop.checkpoint(hub.join(auth, Seq("node"))
+        .select(col("node"), col("hub"), col("auth")), eager = true)
+    }
   }
 
   /**
@@ -1938,34 +1758,36 @@ object TopicGraph {
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    var cur = und.localCheckpoint(true)
-    var n = cur.count()
-    if (n <= localThreshold) return kTrussLocal(cur, k, rounds)
-    var r = 0
-    var done = n == 0
-    while (r < rounds && !done) {
-      val sup = triangleEdgeSupport(cur)
-      // lazy: the count below materializes the round — one job instead
-      // of the eager-checkpoint + count pair (sup itself stays eager:
-      // its orient cache is unpersisted inside triangleEdgeSupport)
-      val next = cur.join(sup, Seq("u", "v"))
-        .filter(col("sup") >= k - 2)
-        .select(col("u"), col("v"))
-        .localCheckpoint(eager = false)
-      val m = next.count()
-      done = m == n || m == 0
-      n = m
-      cur = next
-      r += 1
+    GraphLoop("kTrussPeel", und, localThreshold,
+        e => Some(kTrussLocal(e, k, rounds)), checkpointEdges = true) { loop =>
+      var cur = loop.edges
+      var n = loop.nEdges
+      var r = 0
+      var done = n == 0
+      while (r < rounds && !done) {
+        val sup = triangleEdgeSupport(loop, cur)
+        // lazy: the count below materializes the round — one job instead
+        // of the eager-checkpoint + count pair (sup itself stays eager:
+        // its orient cache is freed inside triangleEdgeSupport)
+        val next = loop.checkpoint(cur.join(sup, Seq("u", "v"))
+          .filter(col("sup") >= k - 2)
+          .select(col("u"), col("v")))
+        val m = next.count()
+        done = m == n || m == 0
+        n = m
+        loop.release(cur, sup)
+        cur = next
+        r += 1
+      }
+      cur
     }
-    cur
   }
 
   /** Per-edge triangle support of a canonical undirected relation
     * (u < v, distinct): the [[triangles]] compact-forward enumeration,
     * each triangle exploded to its 3 canonical edges and counted.
     * Returns (u, v, sup) for edges in >= 1 triangle, checkpointed. */
-  private def triangleEdgeSupport(und: DataFrame): DataFrame = {
+  private def triangleEdgeSupport(loop: GraphLoop, und: DataFrame): DataFrame = {
     val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
     val withDeg = und
@@ -1973,19 +1795,18 @@ object TopicGraph {
       .join(deg.select(col("node").as("v"), col("d").as("dv")), Seq("v"))
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val orient = withDeg.select(
+    val orient = loop.persist(withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("a"),
       when(uFirst, col("v")).otherwise(col("u")).as("b"),
       when(uFirst, struct(col("dv").as("kd"), col("v").as("kn")))
-        .otherwise(struct(col("du").as("kd"), col("u").as("kn"))).as("bkey"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .otherwise(struct(col("du").as("kd"), col("u").as("kn"))).as("bkey")))
     val wedges = orient.as("e1")
       .join(orient.as("e2"), col("e1.a") === col("e2.a") &&
         col("e1.bkey") < col("e2.bkey"))
       .select(col("e1.a").as("ta"), col("e1.b").as("tb"), col("e2.b").as("tc"))
     val tri = wedges.join(
       orient.select(col("a").as("tb"), col("b").as("tc")), Seq("tb", "tc"))
-    val sup = tri.select(explode(array(
+    val sup = loop.checkpoint(tri.select(explode(array(
         struct(least(col("ta"), col("tb")).as("u"),
           greatest(col("ta"), col("tb")).as("v")),
         struct(least(col("ta"), col("tc")).as("u"),
@@ -1993,9 +1814,8 @@ object TopicGraph {
         struct(least(col("tb"), col("tc")).as("u"),
           greatest(col("tb"), col("tc")).as("v")))).as("e"))
       .select(col("e.u"), col("e.v"))
-      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
-      .localCheckpoint(true)
-    orient.unpersist(false)
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup")), eager = true)
+    loop.release(orient)
     sup
   }
 

@@ -3235,4 +3235,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(a.map(x => (x._1, x._2)) == Seq((1, 1L), (2, 2L), (3, 3L)))
     assert(a(1)._3 == 1.0)
   }
+
+  test("q40_dedup_exact returns exactly the planted exact-duplicate groups") {
+    // the driver testdata has no exact duplicates, so the oracle row
+    // compares empty to empty there; plant them in a table of our own
+    val dir = java.nio.file.Files.createTempDirectory("q40").toString
+    val unique = (1L to 30L).map(i => (i, s"unique text number $i"))
+    val planted = Seq((101L, "dup A"), (57L, "dup A"), (230L, "dup A"),
+      (88L, "dup B"), (12L, "dup B"))
+    (unique ++ planted).toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("spec"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("q40_dedup_exact")(spark, dir)
+      .select("n_dups", "canonical_id").as[(Long, Long)].collect().toSet
+    assert(got == Set((3L, 57L), (2L, 12L)))
+  }
 }

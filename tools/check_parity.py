@@ -46,6 +46,7 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    vacuous = []
     for name in sorted(oracle):
         if only and name not in only:
             continue
@@ -76,9 +77,15 @@ def main():
             print(f"FAIL {name}: value mismatch, first diffs: {bad}")
             n_fail += 1
             continue
-        print(f"PASS {name} ({len(cg)} rows)")
+        if not cg:
+            # empty on both sides: the row agrees but checks nothing
+            print(f"PASS {name} (0 rows) VACUOUS: Spark and DuckDB both empty")
+            vacuous.append(name)
+        else:
+            print(f"PASS {name} ({len(cg)} rows)")
         n_pass += 1
-    print(f"== {n_pass} pass / {n_fail} fail ==")
+    tail = f" / {len(vacuous)} vacuous ({', '.join(vacuous)})" if vacuous else ""
+    print(f"== {n_pass} pass / {n_fail} fail{tail} ==")
     sys.exit(1 if n_fail else 0)
 
 if __name__ == "__main__":
